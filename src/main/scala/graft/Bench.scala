@@ -1,203 +1,136 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.JsonLite.obj
+import graft.core.SessionTuning
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+/** Timing contract: min of 3 passes per query at sf0.1.
+  *
+  * Prints ONE stdout line, last: total, cpus and per-family subtotals
+  * (`families`), plus the names of the queries that threw (`failed`), which
+  * are left out of every time. The per-query table, with GC and heap
+  * columns, goes to BENCH_FULL_c<cpus>.json. Exits non-zero when a query
+  * failed, after writing both.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (default the sf0.1 testdata), SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_BENCH_ONLY=<comma-separated name prefixes> (time only those,
+  * writing BENCH_PARTIAL_c<cpus>.json instead), SPARK_GRAFT_BENCH_ORDER=
+  * reverse (every pass in reverse-sorted order: the order experiment of
+  * VARIANCE.json's order_note).
+  */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed run: wall, GC time during it, used heap right after it. */
+  final case class Sample(sec: Double, gcMs: Long, heapMb: Long)
+
+  /** Name up to the first '_' with trailing digits stripped, so q1, q10 and
+    * q_salted_join all land in "q".
+    */
+  def family(n: String): String =
+    n.takeWhile(_ != '_').reverse.dropWhile(_.isDigit).reverse
+
+  private def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
+    .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+
+  /** One timed pass per element of `orders`. Each query runs to a noop-sink
+    * full materialization (not count(), which lets Catalyst collapse plans:
+    * see core/Materialize). Persisted state is purged before each pass so
+    * passes are self-contained. A query that throws in any pass is
+    * returned in the failed list and has no sample in that pass.
+    */
+  def timePasses(spark: SparkSession, sfDir: String,
+                 orders: Seq[Seq[(String, Query)]]): (Seq[Map[String, Sample]], Seq[String]) = {
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val samples = orders.zipWithIndex.map { case (order, pass) =>
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      spark.catalog.clearCache()
+      order.flatMap { case (name, fn) =>
+        val gc0 = gcMillis()
+        val t0 = System.nanoTime()
+        try {
+          graft.core.Materialize.full(fn(spark, sfDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+          Some(name -> Sample(sec, gcMillis() - gc0, heapMb))
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] pass ${pass + 1} $name failed: ${e.getMessage}")
+          failed += name
+          None
+        }
+      }.toMap
+    }
+    (samples, failed.toSeq.sorted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT + codegen + first read of every parquet table, so
-    // the first timed query doesn't absorb one-time costs (round-2 q10 was
-    // ~6.8s of which most was warmup — masks real regressions round-over-round)
-    // per-item try: one missing table must not silently abort the rest of
-    // the warmup (which would reintroduce first-query skew invisibly)
+    val cpus = SessionTuning.envCores
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val all = SparkEntry.queries
+    val ordered = SparkEntry.select(only).map(n => n -> all(n))
+    only.foreach(_ => System.err.println(
+      s"[bench] SPARK_GRAFT_BENCH_ONLY matched ${ordered.size} queries: " +
+        ordered.map(_._1).mkString(", ")))
+    val spark = SessionTuning.local(cpus)
+    // untimed warmup: JIT, codegen and the first read of every table, then
+    // one pass over the query set, which builds the memoized fixtures
+    // (graft.queries.Fixtures) and absorbs per-query first-run codegen, so
+    // the timed passes measure plan cost, not one-time costs
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
         "region", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup skipped $t: ${e.getMessage}") }
     }
-    // Timed: min of 3 passes per query, in sorted-name order.
-    //  - min-of-N: a single pass is hostage to GC pauses / machine
-    //    contention — round 6 showed 3-4x swings on queries whose code had
-    //    not changed. The min over warm passes is the plan's cost; noise
-    //    only ever inflates a sample, never deflates it.
-    //  - sorted order: SparkEntry.queries is a Map, so adding a query
-    //    permutes iteration order and shifts which neighbors' GC debt each
-    //    query inherits. Sorting keeps run order stable across rounds.
-    //    SPARK_GRAFT_BENCH_ORDER=reverse runs the reverse-sorted order —
-    //    the order-independence experiment (VARIANCE.json order_note):
-    //    diffing the two orders measures how much a query's number is its
-    //    neighbors' GC debt rather than its own plan.
-    // SPARK_GRAFT_BENCH_ONLY=<comma-separated name prefixes>: time only
-    // matching queries — the local-reproduction switch for adjudicating
-    // single-query drift (the driver sets nothing, so it always runs the
-    // full set).
-    // Empty/typo'd filters fail fast: a prefix that matches nothing (or an
-    // empty-string value, which would match EVERYTHING while looking like a
-    // single-query run) would otherwise produce a normal-looking BENCH
-    // artifact that timed the wrong set.
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(ps0) =>
-        val ps = ps0.split(',').map(_.trim).filter(_.nonEmpty)
-        if (ps.isEmpty) {
-          System.err.println(
-            "[bench] SPARK_GRAFT_BENCH_ONLY is set but empty — refusing to " +
-              "time the full set under a filter flag; unset it or name a prefix")
-          sys.exit(2)
-        }
-        n => ps.exists(n.startsWith)
-      case None => _ => true
-    }
-    val ordered0 = SparkEntry.queries.toSeq.filter(kv => only(kv._1))
-      .sortBy(_._1)
-    if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) {
-      if (ordered0.isEmpty) {
-        System.err.println(
-          s"[bench] SPARK_GRAFT_BENCH_ONLY=${sys.env("SPARK_GRAFT_BENCH_ONLY")} " +
-            "matched zero queries — check the prefix spelling")
-        sys.exit(2)
-      }
-      System.err.println(
-        s"[bench] SPARK_GRAFT_BENCH_ONLY matched ${ordered0.size} queries: " +
-          ordered0.map(_._1).mkString(", "))
-    }
-    // full untimed pass over the (possibly filtered) query set: builds/caches
-    // the memoized fixtures (graft.queries.Fixtures — JobRunner-backed, so
-    // the second pass reuses them) and absorbs per-query first-run codegen.
-    // The timed pass below then measures operator plan cost, not fixture I/O.
-    // Warming only the filtered set keeps single-query repro runs fast.
-    ordered0.foreach { case (name, fn) =>
+    ordered.foreach { case (name, fn) =>
       try graft.core.Materialize.full(fn(spark, sfDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     }
-    // Per-pass order: pass 1 sorted, passes 2..n deterministically
-    // seeded shuffles. The r12 order experiment measured median 5.4% /
-    // p90 21.5% per-query movement between forward and reverse order
-    // (VARIANCE.json order_note) — neighbor GC debt is real — so the
-    // min-of-3 now spans three DIFFERENT orders, which de-correlates a
-    // query's min from any one neighborhood. Seeds are fixed, so run
-    // order is still reproducible round over round.
-    // SPARK_GRAFT_BENCH_ORDER=reverse forces reverse-sorted in every
-    // pass (the order-experiment switch).
-    def orderFor(pass: Int): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse"))
-        ordered0.reverse
-      else if (pass == 1) ordered0
-      else new scala.util.Random(pass.toLong * 7919L).shuffle(ordered0)
-    // GC/heap telemetry: cumulative collector time across all GC beans, and
-    // used-heap after each sample. Recorded per query per pass so a future
-    // wall-time outlier is adjudicated mechanically (wall inflation that
-    // tracks gc_ms is memory pressure; wall inflation with flat gc_ms is
-    // ambient CPU contention) instead of by narrative — the r12 driver tail
-    // took three rounds to adjudicate for lack of exactly these columns.
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    def heapUsedMb(): Long = java.lang.management.ManagementFactory
-      .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
-    final case class Sample(sec: Double, gcMs: Long, heapMb: Long)
-    val passes = 3
-    val samples = (1 to passes).map { pass =>
-      // drop every persisted RDD/Dataset from previous passes: queries
-      // persist() intermediates and never unpersist (correct for a user
-      // session; in a 100+-query loop the entries accumulate without
-      // bound). Purging makes each pass self-contained and removes cache
-      // pressure as a confounder — r10 saw one run's pass totals grow
-      // 49 s / 97.6 s / 146.8 s while its identical back-to-back twin ran
-      // flat (53.6/49.3/50.2), so the growth is environmental, but the
-      // purge bounds the engine-side contribution either way. Disk-backed
-      // state (snapshot fixtures) is unaffected.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      orderFor(pass).map { case (name, fn) =>
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        // noop-sink full materialization, NOT count(): count() lets
-        // Catalyst prune projections and eliminate unique-key left joins,
-        // so several queries timed a collapsed plan (see core/Materialize;
-        // numbers from r12 on are re-baselined under the honest action)
-        try { graft.core.Materialize.full(fn(spark, sfDir)) }
-        catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        name -> Sample(sec, gcMillis() - gc0, heapUsedMb())
-      }.toMap
+    // min-of-3: noise only ever inflates a sample. Pass 1 runs in sorted
+    // order and passes 2-3 in fixed-seed shuffles, so a query's min spans
+    // three different neighborhoods of GC debt (VARIANCE.json order_note)
+    val orders = (1 to 3).map { pass =>
+      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse")) ordered.reverse
+      else if (pass == 1) ordered
+      else new scala.util.Random(pass.toLong * 7919L).shuffle(ordered)
     }
-    // per-pass totals to stderr: when a future round's numbers look off,
-    // this shows whether noise hit one pass or all three (the JSON line on
-    // stdout stays the single driver-parsed artifact)
+    val (samples, failed) = timePasses(spark, sfDir, orders)
     samples.zipWithIndex.foreach { case (m, i) =>
       System.err.println(
         f"[bench] pass ${i + 1}: ${m.values.map(_.sec).sum}%.1f s, gc ${m.values.map(_.gcMs).sum} ms")
     }
-    val results = ordered0.map { case (name, _) =>
-      name -> samples.map(_(name)).minBy(_.sec)
-    }
-    // 4 decimals (0.1 ms): full double precision tripled the line length
-    // and the driver archives only a fixed-size tail of stdout — r7's
-    // BENCH tail lost the first ~18 queries AND the total to truncation.
-    val qs = results.map { case (k, v) => f""""$k":${v.sec}%.4f""" }
-      .mkString("{", ",", "}")
+    val timed = ordered.map(_._1).filterNot(failed.contains)
+    val results = timed.map(n => n -> samples.map(_(n)).minBy(_.sec))
     val total = results.map(_._2.sec).sum
-    // THE stdout contract line (VERDICT r20 item 1). The driver archives
-    // and parses only a ~2000-char stdout TAIL; at 170 queries the
-    // per-query line is ~4.3 KB, so its head was cut and the parse failed
-    // every round since ~r14 (BENCH_r14..r20.json all `parsed: null`,
-    // PERF per_query/geomean/scaling all empty). The contract line is
-    // therefore tail-sized: total + cpus + per-FAMILY subtotals (11
-    // families, ~300 chars — fits any tail with room to spare). The
-    // per-query min-of-3 table — same methodology, nothing dropped — is
-    // written every run to the cpus-stamped BENCH_FULL_c$cpus.json below
-    // (VERDICT r20 item 2: the driver's c8 re-run used to clobber the c32
-    // table when the artifact name had no core count in it).
-    // family = name up to the first '_' with trailing digits stripped, so
-    // q1/q3/q5/q6/q10/q_* all land in "q" (ann, dd, gr, job, mm, op, pl,
-    // q, rt, tx, urd).
-    def family(n: String): String =
-      n.takeWhile(_ != '_').reverse.dropWhile(_.isDigit).reverse
-    val famQs = results.groupBy { case (k, _) => family(k) }.toSeq
-      .sortBy(_._1)
-      .map { case (f, rs) => f""""$f":${rs.map(_._2.sec).sum}%.4f""" }
-      .mkString("{", ",", "}")
+    // 4 decimals keep the stdout line short: a reader may keep only a
+    // 2000-char tail of stdout
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    val families = obj(results.groupBy(r => family(r._1)).toSeq.sortBy(_._1)
+      .map { case (f, rs) => f -> f"${rs.map(_._2.sec).sum}%.4f" })
     val line =
-      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"queries":$famQs,"value":$total%.4f}"""
-    println(line)
-    // Complete per-query table (the pre-r21 stdout line, now file-only +
-    // echoed to stderr for logs) — with per-query telemetry columns:
-    // gc_ms = GC time during the min-wall sample (the reported number's
-    // own GC cost), gc_ms_worst = max GC delta across the 3 passes
-    // (neighbor-debt / pressure signal), heap_mb = used heap right after
-    // the min-wall sample.
-    val gcQs = results.map { case (k, v) => s""""$k":${v.gcMs}""" }
-      .mkString("{", ",", "}")
-    val gcWorstQs = ordered0.map { case (name, _) =>
-      s""""$name":${samples.map(_(name).gcMs).max}"""
-    }.mkString("{", ",", "}")
-    val heapQs = results.map { case (k, v) => s""""$k":${v.heapMb}""" }
-      .mkString("{", ",", "}")
+      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"families":$families,"failed":$failedJson,"value":$total%.4f}"""
+    // gc_ms: GC during the min-wall sample; gc_ms_worst: max over passes
+    // (neighbor debt); heap_mb: used heap right after the min-wall sample
     val fullLine =
-      f"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"queries":$qs,"gc_ms":$gcQs,"gc_ms_worst":$gcWorstQs,"heap_mb":$heapQs,"value":$total%.4f}"""
-    System.err.println(fullLine)
-    // A filtered (SPARK_GRAFT_BENCH_ONLY) run writes to BENCH_PARTIAL_*
-    // so a single-query repro can never clobber the committed full-table
-    // artifact — the same never-clobber rule as ScaleCheck's
-    // SCALE_CHECK_REPRO.json. Both artifacts carry the core count in the
-    // name so the driver's low-core scaling run coexists with the main
-    // run instead of overwriting it.
+      s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,""" +
+        s""""queries":${obj(results.map { case (k, v) => k -> f"${v.sec}%.4f" })},""" +
+        s""""gc_ms":${obj(results.map { case (k, v) => k -> v.gcMs.toString })},""" +
+        s""""gc_ms_worst":${obj(timed.map(n => n -> samples.map(_(n).gcMs).max.toString))},""" +
+        s""""heap_mb":${obj(results.map { case (k, v) => k -> v.heapMb.toString })},""" +
+        f""""failed":$failedJson,"value":$total%.4f}"""
+    // a filtered run never clobbers the committed full table; both names
+    // carry the core count so runs at two core counts coexist
     val artifact =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) s"BENCH_PARTIAL_c$cpus.json"
-      else s"BENCH_FULL_c$cpus.json"
-    try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+      if (only.isDefined) s"BENCH_PARTIAL_c$cpus.json" else s"BENCH_FULL_c$cpus.json"
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), fullLine + "\n")
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] $artifact write failed: ${e.getMessage}") }
     spark.stop()
+    println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -29,6 +29,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.map(_._1).reduce(_ ++ _)
 
+  /** The one query-set filter of the harness (Bench, Verify, PlanDump,
+    * ScaleCheck): the `names` starting with one of the comma-separated
+    * `prefixes`, sorted by name; `None` selects every name. An empty prefix
+    * list or one that matches nothing fails, because either would pass for
+    * a normal run over the wrong set.
+    */
+  def select(prefixes: Option[String],
+             names: Iterable[String] = queries.keys): Seq[String] =
+    prefixes.fold(names.toSeq.sorted) { spec =>
+      val ps = spec.split(',').map(_.trim).filter(_.nonEmpty)
+      require(ps.nonEmpty, s"empty query-name prefix list '$spec'")
+      val hit = names.filter(n => ps.exists(n.startsWith)).toSeq.sorted
+      require(hit.nonEmpty, s"query-name prefixes '$spec' match nothing")
+      hit
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Cols.{q => Q}
 import graft.core.SnapshotStore
@@ -417,12 +417,9 @@ object Shell {
 
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty, "usage: Shell ds|cat|grep ...")
-    val spark = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // SPARK_MASTER points the shell at a deployment's cluster
+    val spark = graft.core.SessionTuning.local(4,
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
     spark.sparkContext.setLogLevel("ERROR")
     try argv(0) match {
       case "ds" =>

@@ -27,6 +27,27 @@ object SessionTuning {
     */
   val HugeMethodLimit = 8000
 
+  /** Core count of the harness entry points: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The one session factory: `local[cores]` with one shuffle partition
+    * per core, UTC session time, parquet nanosecond timestamps read as
+    * longs and no UI, then [[tune]], logging at WARN. `extraConf` is
+    * applied last, so it can override any of these (e.g. `spark.master`).
+    */
+  def local(cores: Int, extraConf: (String, String)*): SparkSession = {
+    val base = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = extraConf.foldLeft(tune(base)) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.hugeMethodLimit", HugeMethodLimit.toString)
       // Shuffled-hash joins come from the AQE runtime rewrite ONLY (the
@@ -53,4 +74,13 @@ object SessionTuning {
       // spills exactly as before.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         (64L * 1024 * 1024).toString)
+      // A Union whose children share one hash partitioning (iterateChain
+      // over a chain of snapshots bucketed on the same hashlabel) reports
+      // that partitioning by default, so groupBy on the bucket column
+      // plans no Exchange. At run time the union concatenates its
+      // children's partitions, so a key present in several links lands in
+      // several partitions and its group is split: 3 bucketed links with
+      // 997 shared keys gave 2,991 groups. Off, the union reports unknown
+      // partitioning and the aggregate gets the one Exchange it needs.
+      .config("spark.sql.unionOutputPartitioning", "false")
 }

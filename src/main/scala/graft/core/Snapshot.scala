@@ -773,6 +773,10 @@ object MetaJson {
   */
 object JsonLite {
   def parse(s: String): Any = new P(s).value()
+
+  /** `{"k":v,...}` from keys and already-rendered JSON values. */
+  def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   private final class P(s: String) {
     private var i = 0
     private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.SessionTuning
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -30,25 +30,14 @@ object PlanDump {
     val suffix = args(2)
     val opts = args.drop(3)
     val exec = opts.contains("exec")
-    val keep: String => Boolean = opts.filterNot(_ == "exec").headOption match {
-      case Some(p) => val ps = p.split(','); n => ps.exists(n.startsWith)
-      case None => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = graft.SparkEntry.select(opts.find(_ != "exec"))
+    val spark = SessionTuning.local(SessionTuning.envCores)
     new java.io.File(outDir).mkdirs()
     var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    val queries = graft.SparkEntry.queries
+    names.foreach { name =>
       try {
-        val df = fn(spark, sfDir)
+        val df = queries(name)(spark, sfDir)
         // Executing through df's own QueryExecution (not a write's) is
         // what makes the SAME plan object adaptive-final for the dump.
         if (exec) df.queryExecution.toRdd.foreach(_ => ())

@@ -93,6 +93,25 @@ class SnapshotSpec extends AnyFunSuite {
       s"re-registered bucketed table must keep co-partitioning:\n$plan2")
   }
 
+  test("groupBy(hashlabel) over a chain of hashed snapshots counts each key once") {
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_union_hash"))
+    // 3 links hashed on k, every key present in every link: a union that
+    // kept its children's bucketing would aggregate per link, not per key
+    var prev: Option[String] = None
+    (0 until 3).foreach { i =>
+      store.write((0 until 97).map(k => (k.toLong, i.toLong)).toDF("k", "v"),
+        s"uh.$i", hashlabel = Some("k"), previous = prev, slices = 4)
+      prev = Some(s"uh.$i")
+    }
+    val perKey = store.iterateChain("uh.2", hashlabel = Some("k"))
+      .groupBy("k").count().collect().map(_.getLong(1))
+    val groups = perKey.length
+    assert(groups == 97, "one group per distinct key")
+    assert(perKey.forall(_ == 3L))
+  }
+
   test("strange column names survive the snapshot layer (reference parity)") {
     val s = spark
     import s.implicits._

@@ -6,18 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Test/fork is on, so this never collides with a user session).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.core.SessionTuning.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.core.SessionTuning.local(4, "spark.app.name" -> "graft-test")
 
   /** sf0.001 driver testdata — tiny, read-only. */
   val sfDir = "/root/testdata/sf0.001"
