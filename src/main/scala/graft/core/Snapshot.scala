@@ -1,8 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Column-BY-NAME helper: `functions.col(name)` PARSES its argument
@@ -87,9 +91,10 @@ final case class Snapshot(meta: SnapshotMeta, dir: String) {
   *
   * Scale note: the sidecar holds only O(columns) metadata; data goes through
   * `DataFrameWriter.parquet`, so a snapshot written from a 1000-executor
-  * cluster is just a normal distributed Parquet write. Zone-map min/max are
-  * computed in the same Spark job (one extra agg pass) and enable driver-side
-  * chain pruning before any scan is planned.
+  * cluster is just a normal distributed Parquet write. `lines` and the
+  * zone-map min/max are observed inside that write job (no second pass over
+  * the upstream plan) and enable driver-side chain pruning before any scan
+  * is planned.
   */
 final class SnapshotStore(val spark: SparkSession, val root: String) {
   Files.createDirectories(Paths.get(root))
@@ -116,6 +121,11 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       formatVersion: Option[Int] = None,
       preRouted: Boolean = false): Snapshot = {
     val n = if (slices > 0) slices else spark.sparkContext.defaultParallelism
+    // lines + zone maps, observed by the write job itself (below): a
+    // separate agg action would re-run the whole upstream plan (parse,
+    // type, shuffle) just for these few values
+    val comparable = SnapshotStore.zoneMapped(df.schema)
+    val aggs = SnapshotStore.statsAggs(comparable, zoneMaps)
     // preRouted: the caller asserts df already arrives hash-clustered on
     // the hashlabel (e.g. PageRank.normalizedEdges, whose one build
     // exchange IS hashpartitioning(src)), so the routing repartition
@@ -130,6 +140,10 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       case Some(h) if !preRouted => df.repartition(n, Cols.q(h))
       case _                     => df
     }
+    // observed on the frame the writer consumes, so the aggregates run in
+    // the write's result stage, where a retried task's values count once
+    val observation = Observation()
+    val observed = routed.observe(observation, aggs.head, aggs.tail: _*)
     val dir = dirOf(name)
     val dataDir = s"$dir/data"
     // Drop any stale bucket-table registration for this data dir (rewrites).
@@ -147,41 +161,21 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
         val p = new org.apache.hadoop.fs.Path(dataDir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(p, true)
-        routed.write.format("parquet").option("path", dataDir)
+        observed.write.format("parquet").option("path", dataDir)
           .bucketBy(n, h).saveAsTable(SnapshotStore.bucketTable(dataDir))
       case None =>
-        routed.write.mode("overwrite").parquet(dataDir)
+        observed.write.mode("overwrite").parquet(dataDir)
     }
-    // One agg pass for lines + zone maps (comparable, non-complex types only).
-    val comparable = df.schema.fields.filter { f =>
-      f.dataType.typeName match {
-        case "binary" | "array" | "map" | "struct" => false
-        case _                                     => true
+    // The observed row is delivered by a query-execution listener once the
+    // write's execution ends, so it can trail the write's return a little;
+    // a bounded wait keeps a lost event from hanging the writer.
+    val row =
+      try Await.result(observation.future, SnapshotStore.ObservationWait)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"snapshot $name: data written, but its lines/zone-map observation " +
+            s"did not arrive within ${SnapshotStore.ObservationWait}")
       }
-    }
-    val aggs = count(lit(1)).as("__lines") +: comparable.flatMap { f =>
-      if (zoneMaps) {
-        // NaN must not poison float zone maps (Spark's max sorts NaN above
-        // everything; the reference excludes NaN/None, dataset.py:875-897)
-        // — UNLESS NaN is the only value, where the reference records
-        // min=max=NaN (a_test_dataset_nan.py). Range skipping stays safe:
-        // every comparison against a "NaN" bound is false, so such a
-        // snapshot is never skipped.
-        f.dataType.typeName match {
-          case "double" | "float" =>
-            val qc = Cols.q(f.name)
-            val nonNaN = when(!isnan(qc), qc)
-            val allNaN = max(when(isnan(qc), lit("NaN")))
-            Seq(coalesce(min(nonNaN).cast("string"), allNaN).as(s"__min_${f.name}"),
-                coalesce(max(nonNaN).cast("string"), allNaN).as(s"__max_${f.name}"))
-          case _ =>
-            val qc = Cols.q(f.name)
-            Seq(min(qc).cast("string").as(s"__min_${f.name}"),
-                max(qc).cast("string").as(s"__max_${f.name}"))
-        }
-      } else Nil
-    }.toSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     val lines = row.getLong(0)
     val mm: Map[String, (Option[String], Option[String])] =
       if (zoneMaps)
@@ -198,9 +192,21 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
     val meta = SnapshotMeta(name, cols, lines, n, hashlabel, previous, caption,
       storedSchema = hashlabel.map(_ => routed.schema.toDDL),
       formatVersion = formatVersion)
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
+    writeMeta(dir, meta)
+  }
+
+  /** Commit point of every snapshot: `meta.json` is written to a sibling
+    * temp file and atomically renamed over, so a crash never leaves a
+    * truncated sidecar (`get`, `exists` and `list` only see `meta.json`).
+    * Refreshes the cache entry and returns the committed snapshot.
+    */
+  private def writeMeta(dir: String, meta: SnapshotMeta): Snapshot = {
+    val tmp = Paths.get(dir, "meta.json.tmp")
+    Files.writeString(tmp, MetaJson.render(meta))
+    Files.move(tmp, Paths.get(dir, "meta.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     val snap = Snapshot(meta, dir)
-    metaCache.put(name, snap)
+    metaCache.put(meta.name, snap)
     snap
   }
 
@@ -278,10 +284,7 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       hashlabel = parent.meta.hashlabel.filterNot(overlap.contains),
       columns = parent.meta.columns.filterNot(c => overlap.contains(c.name)) ++
         snap.meta.columns.filterNot(_.name == RowId))
-    Files.writeString(Paths.get(dirOf(name), "meta.json"), MetaJson.render(merged))
-    val out = Snapshot(merged, dirOf(name))
-    metaCache.put(name, out)
-    out
+    writeMeta(dirOf(name), merged)
   }
 
   /** link_to_here (reference dataset.py:292-327): expose an existing
@@ -297,10 +300,7 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       previous = previous.orElse(t.meta.previous),
       parent = t.meta.parent,
       dataDir = Some(t.meta.dataDir.getOrElse(s"${t.dir}/data")))
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
-    val out = Snapshot(meta, dir)
-    metaCache.put(name, out)
-    out
+    writeMeta(dir, meta)
   }
 
   /** Full logical dataset: resolves the parent chain (column-append) by
@@ -654,10 +654,7 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
       columns = t.meta.columns.filter(c => keep.contains(c.name)),
       hashlabel = t.meta.hashlabel.filter(keep.contains),
       dataDir = Some(t.meta.dataDir.getOrElse(s"${t.dir}/data")))
-    Files.writeString(Paths.get(dir, "meta.json"), MetaJson.render(meta))
-    val out = Snapshot(meta, dir)
-    metaCache.put(name, out)
-    out
+    writeMeta(dir, meta)
   }
 
   def list(): Seq[String] =
@@ -669,6 +666,47 @@ final class SnapshotStore(val spark: SparkSession, val root: String) {
 
 object SnapshotStore {
   val RowIdName = "__rowid"
+
+  /** How long `write` waits, after the write job returns, for the
+    * listener to deliver the observed lines/zone-map row.
+    */
+  private val ObservationWait: FiniteDuration = 60.seconds
+
+  /** Columns that get zone maps: comparable, non-complex types only. */
+  private[graft] def zoneMapped(schema: StructType): Seq[StructField] =
+    schema.fields.toSeq.filter { f =>
+      f.dataType.typeName match {
+        case "binary" | "array" | "map" | "struct" => false
+        case _                                     => true
+      }
+    }
+
+  /** The snapshot statistics `write` records: `__lines`, then (with
+    * `zoneMaps`) min and max as strings for each of `cols`, in order.
+    */
+  private[graft] def statsAggs(cols: Seq[StructField], zoneMaps: Boolean): Seq[Column] =
+    count(lit(1)).as("__lines") +: cols.flatMap { f =>
+      if (zoneMaps) {
+        // NaN must not poison float zone maps (Spark's max sorts NaN above
+        // everything; the reference excludes NaN/None, dataset.py:875-897)
+        // — UNLESS NaN is the only value, where the reference records
+        // min=max=NaN (a_test_dataset_nan.py). Range skipping stays safe:
+        // every comparison against a "NaN" bound is false, so such a
+        // snapshot is never skipped.
+        f.dataType.typeName match {
+          case "double" | "float" =>
+            val qc = Cols.q(f.name)
+            val nonNaN = when(!isnan(qc), qc)
+            val allNaN = max(when(isnan(qc), lit("NaN")))
+            Seq(coalesce(min(nonNaN).cast("string"), allNaN).as(s"__min_${f.name}"),
+                coalesce(max(nonNaN).cast("string"), allNaN).as(s"__max_${f.name}"))
+          case _ =>
+            val qc = Cols.q(f.name)
+            Seq(min(qc).cast("string").as(s"__min_${f.name}"),
+                max(qc).cast("string").as(s"__max_${f.name}"))
+        }
+      } else Nil
+    }
 
   /** Catalog table name for a hashed snapshot's bucketed data directory.
     * Keyed by the data dir (not the snapshot name) so metadata-only views

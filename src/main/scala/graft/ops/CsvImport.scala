@@ -265,10 +265,10 @@ object CsvImport {
         fields = fields.take(nExpected)
       (ln, line, fields)
     }
-    // allowBad=false runs an eager validation action below; without a
-    // cache that action plus the caller's consumption parses the whole
-    // file again — cache (spilling) so the parse happens once, released
-    // via CsvImportResult.release()
+    // allowBad=false runs an eager validation job below (one job over
+    // all partitions); without a cache that job plus the caller's
+    // consumption parses the whole file again — cache (spilling) so the
+    // parse happens once, released via CsvImportResult.release()
     val parsed =
       if (!cfg.allowBad)
         parsed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -296,8 +296,10 @@ object CsvImport {
     }
     val bad = spark.createDataFrame(badRdd, badSchema)
     if (!cfg.allowBad) {
-      val nbad = bad.limit(1).count()
-      require(nbad == 0, s"csvimport: bad lines in $path (allowBad=false)")
+      // one job over every partition, each stopping at its first bad line
+      // (a DataFrame limit(1).count() costs two jobs under AQE)
+      val anyBad = spark.sparkContext.runJob(badRdd, (it: Iterator[Row]) => it.hasNext)
+      require(!anyBad.contains(true), s"csvimport: bad lines in $path (allowBad=false)")
     }
     val skipped = spark.createDataFrame(
       skippedRdd.map { case (ln, l, _) => Row(ln, l) }, badSchema)

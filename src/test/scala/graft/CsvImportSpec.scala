@@ -68,6 +68,19 @@ class CsvImportSpec extends AnyFunSuite {
     }
   }
 
+  test("allowBad=false finds a bad line in a later partition") {
+    // two files = at least two partitions; only the second file is bad
+    val dir = tmpDir("csv_badlater")
+    Files.writeString(Paths.get(dir, "part0.csv"), "1,2\n3,4\n")
+    Files.writeString(Paths.get(dir, "part1.csv"), "5,6\nonly-one-field\n")
+    val cfg = CsvImportConfig(labels = Seq("a", "b"))
+    val e = intercept[IllegalArgumentException] { CsvImport(spark, dir, cfg) }
+    assert(e.getMessage.contains("bad lines"), e.getMessage)
+    val lenient = CsvImport(spark, dir, cfg.copy(allowBad = true))
+    assert(lenient.data.count() == 3)
+    assert(lenient.bad.collect().map(_.getString(1)).toSeq == Seq("only-one-field"))
+  }
+
   test("leading comment/empty lines never become the header") {
     val p = write("hdr_comment", "# generated\n\na,b\n1,2\n")
     val r = CsvImport(spark, p, CsvImportConfig(comment = "#", skipEmptyLines = true))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.{SnapshotStore, ZoneMapOrder}
+import scala.jdk.CollectionConverters._
 import TestSpark.{spark, tmpDir}
 
 /** Snapshot store: metadata round-trip, chain walk, and the zone-map
@@ -419,5 +420,94 @@ class SnapshotSpec extends AnyFunSuite {
     val c = store.write(Seq(nan, inf, 0.0, nan).toDF("f64"), "nan_c", slices = 1)
     assert(c.minOf("f64").contains("0.0"), s"got ${c.minOf("f64")}")
     assert(c.maxOf("f64").contains("Infinity"), s"got ${c.maxOf("f64")}")
+  }
+
+  test("a write runs its upstream plan once, hashed or not") {
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_once"))
+    Seq(Some("k"), None).foreach { hl =>
+      val evaluated = s.sparkContext.longAccumulator("rows evaluated")
+      val df = s.range(1000).as[Long].map { i => evaluated.add(1); i }.toDF("k")
+      val snap = store.write(df, s"once_${hl.isDefined}", hashlabel = hl, slices = 4)
+      assert(evaluated.value == 1000L, s"hashlabel=$hl: upstream rows evaluated")
+      assert(snap.meta.lines == 1000L)
+      assert(snap.minOf("k").contains("0") && snap.maxOf("k").contains("999"))
+    }
+  }
+
+  test("empty frames: lines 0, no zone maps, chain walks skip them") {
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_empty"))
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    val written = Seq(
+      store.write(empty, "e_plain", slices = 2),
+      store.write(empty, "e_hashed", hashlabel = Some("k"), slices = 4),
+      store.write(empty, "e_routed", hashlabel = Some("k"), slices = 4,
+        preRouted = true))
+    written.foreach { snap =>
+      assert(snap.meta.lines == 0L, snap.meta.name)
+      assert(snap.meta.columns.forall(c => c.min.isEmpty && c.max.isEmpty),
+        s"${snap.meta.name}: ${snap.meta.columns}")
+      assert(store.readResolved(snap.meta.name).count() == 0L)
+    }
+    store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "e_0",
+      hashlabel = Some("k"), slices = 4)
+    store.write(empty, "e_1", hashlabel = Some("k"), previous = Some("e_0"), slices = 4)
+    store.write(Seq((3L, "c")).toDF("k", "v"), "e_2",
+      hashlabel = Some("k"), previous = Some("e_1"), slices = 4)
+    assert(store.iterateChain("e_2").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    assert(store.iterateChain("e_2", range = Some(("k", "0", "10")))
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("observed zone maps equal a plain aggregate over the same expressions") {
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_zm_agg"))
+    val nan = Double.NaN
+    val df = Seq[(Long, java.lang.Double, Double, String, String, String, Long)](
+      (5L, 1.5, nan, "pear", "2024-03-01", "10.25", 7L),
+      (-3L, nan, nan, "apple", "2023-12-31", "-2.50", 8L),
+      (42L, null, nan, null, null, "0.10", 9L),
+      (0L, -0.5, nan, "fig", "2024-01-15", null, 6L))
+      .toDF("big", "dbl", "all_nan", "str", "d", "dec", "a.b")
+      .withColumn("d", col("d").cast("date"))
+      .withColumn("dec", col("dec").cast("decimal(10,2)"))
+    val zoned = SnapshotStore.zoneMapped(df.schema)
+    val aggs = SnapshotStore.statsAggs(zoned, zoneMaps = true)
+    val plain = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    Seq(None, Some("big")).foreach { hl =>
+      val snap = store.write(df, s"zm_${hl.isDefined}", hashlabel = hl, slices = 3)
+      assert(snap.meta.lines == plain.getLong(0))
+      zoned.zipWithIndex.foreach { case (f, i) =>
+        assert(snap.minOf(f.name) == Option(plain.getString(1 + 2 * i)), s"min ${f.name}")
+        assert(snap.maxOf(f.name) == Option(plain.getString(2 + 2 * i)), s"max ${f.name}")
+      }
+      assert(snap.minOf("dbl").contains("-0.5") && snap.maxOf("dbl").contains("1.5"))
+      assert(snap.minOf("all_nan").contains("NaN"))
+      assert(snap.minOf("d").contains("2023-12-31") && snap.maxOf("dec").contains("10.25"))
+      assert(snap.minOf("a.b").contains("6") && snap.maxOf("a.b").contains("9"))
+    }
+  }
+
+  test("meta.json is committed by rename: no temp file left, stray temps ignored") {
+    val s = spark
+    import s.implicits._
+    val store = new SnapshotStore(s, tmpDir("snap_atomic"))
+    store.write(Seq(1L, 2L).toDF("k"), "at_a", slices = 1)
+    store.linkToHere("at_a", "at_link")
+    store.filterColumns("at_a", "at_fc", Seq("k"))
+    val leftovers = java.nio.file.Files.walk(java.nio.file.Paths.get(store.root))
+      .iterator().asScala.filter(_.getFileName.toString.endsWith(".tmp")).toSeq
+    assert(leftovers.isEmpty, s"temp files left behind: $leftovers")
+    // a crash between the temp write and the rename leaves only the temp
+    val ghost = java.nio.file.Paths.get(store.root, "at_ghost")
+    java.nio.file.Files.createDirectories(ghost)
+    java.nio.file.Files.writeString(ghost.resolve("meta.json.tmp"), "{\"trunc")
+    assert(!store.exists("at_ghost"))
+    assert(store.list() == Seq("at_a", "at_fc", "at_link"))
   }
 }
